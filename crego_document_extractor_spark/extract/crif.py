@@ -1,24 +1,21 @@
-"""CRIF bureau-report parameter extraction — JVM-side Spark SQL.
+"""CRIF bureau-report parameter extraction — result structs in JVM SQL.
 
 Mirrors the reference control flow (crif.py:37-78, 123-221) for all 15
-parameters.  Physical shape: table-signature values, per-parameter
-best-chunk lookups and confidence ladders are narrow per-document SQL;
-the ACCOUNT path — the per-document hot loop — is relational:
+parameters.  The result builders here are SQL expressions over a fixed
+column contract — per-parameter best-chunk score (``bscore_i``),
+chunk-aware values (``cv_i``/``bt_id_i``, ``nc_i``/``mc_i``) and the
+report/account aggregates — and two plans fill that contract:
 
-  posexplode(account chunks) → scalar regexp columns (whole-stage
-  codegen) → per-doc partial/final aggregation
+* the shipped form, ``extract_all_udf``: the fused parse stage
+  (parse.py ``fuse_retrieval=True``) emits every column as a primitive,
+  so extraction is one codegen projection + explode;
+* the relational check plan, ``extract_all(parsed, engine='sql')``:
+  retrieval, table signatures and account aggregates computed JVM-side
+  by independent SQL forms (retrieval_sql.py, sqlexpr.py).
 
-in a SINGLE lineage: the non-account columns ride the explode on the
-pos-0 row and are recovered with first(ignorenulls), so the parse
-stage executes once, there is no self-join, and the one shuffle
-carries only doc_id + slim scalars (the wide nested payload is
-consumed before the aggregation).  Map-side partial aggregation
-absorbs mega-docs (a 10k-account document combines to one row per map
-task — no salting needed).  The former formulation built account
-structs inside ``transform(chunks, ...)``, which is CodegenFallback:
-interpreted, allocation-heavy, and the measured single-JVM scaling
-ceiling at 32 cores.  The only Python is the vectorized retrieval UDF
-(retrieval.py).
+``extract_crif_legacy`` is the reference's direct-parsing mode; its
+account path is relational (posexplode → codegen regexp columns →
+per-row aggregation, see ``_with_accounts``).
 
 Reference-faithful quirks preserved (see oracle.py for the full list):
 
@@ -35,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import sqlexpr as X
-from .retrieval import with_retrieval
 from ..specs import PARAMETER_SPECS
 
 _NULLS = ("CAST(NULL AS double)", "CAST(NULL AS boolean)",
@@ -149,22 +145,10 @@ def _flag_param(i: int, spec: dict) -> str:
     pid = spec["param_id"]
     bscore = f"bscore_{i}"
     if pid in X.FLAG_PREDS:
-        bc = f"bc_{i}"
-        pred = X.FLAG_PREDS[pid].format(r="ba.remarks")
-        blocks = (f"slice(split({bc}.text, 'Account Number:'), 2, {X.SLICE_REST})")
-        # parse_account_from_text over each sub-block (crif.py:395-401);
-        # only account_type validity + remarks matter for flags
-        ca = (f"filter(transform({blocks}, blk -> named_struct("
-              f"'account_type', {X.extract_field('blk', 'Account Type')}, "
-              f"'remarks', {X.extract_field('blk', 'Account Remarks')})), "
-              f"ba -> ba.account_type != '')")
+        # nc_i / mc_i: accounts in the winning chunk and how many of
+        # them match the flag predicate (crif.py:395-401)
         n_chunk = f"nc_{i}"
         m_chunk = f"mc_{i}"
-        inter = {
-            n_chunk: f"(CASE WHEN {bc} IS NOT NULL THEN size({ca}) ELSE 0 END)",
-            m_chunk: (f"(CASE WHEN {bc} IS NOT NULL THEN "
-                      f"size(filter({ca}, ba -> {pred})) ELSE 0 END)"),
-        }
         chunk_ok = f"({n_chunk} > 0 AND {m_chunk} > 0)"
         rep_m = f"rep_m_{pid}"
         value = f"(CASE WHEN {chunk_ok} THEN true ELSE {rep_m} > 0 END)"
@@ -176,13 +160,11 @@ def _flag_param(i: int, spec: dict) -> str:
         conf = (f"(CASE WHEN {chunk_ok} THEN 0.5d ELSE 0.9d END) "
                 f"* {X.boost(bscore)}")
     else:  # bureau_ntc_accepted — no checker, report path (crif.py:263-266)
-        inter = {}
         value = "false"
         source = "concat('Account Remarks (0/', cast(n_accounts AS string), ' accounts)')"
         conf = f"0.9d * {X.boost(bscore)}"
-    struct = _result(pid, _NULLS[0], value, _NULLS[2], "'bool'",
-                     source, conf, "'extracted'", bscore)
-    return struct, inter
+    return _result(pid, _NULLS[0], value, _NULLS[2], "'bool'",
+                   source, conf, "'extracted'", bscore)
 
 
 _DERIVED_VALUE = {
@@ -213,8 +195,7 @@ _ACCT_CHUNKS = "filter(chunks, c -> startswith(c.header, 'Account Information'))
 _ACCT_FIELDS = ("account_type", "remarks", "is_active", "worst_dpd")
 
 
-def _with_accounts(df: DataFrame, carry: list[str],
-                   extra_keys: tuple[str, ...] = ()) -> DataFrame:
+def _with_accounts(df: DataFrame, carry: list[str]) -> DataFrame:
     """Relational account path (parse_crif_report, crif_parser.py:7-25
     + crif_models.py:47-88).
 
@@ -237,9 +218,9 @@ def _with_accounts(df: DataFrame, carry: list[str],
     ]
     fields = X.account_fields("ac.text")
     ex = (df.withColumn("_rid", F.monotonically_increasing_id())
-          .select("_rid", "doc_id", *extra_keys, *carry,
+          .select("_rid", "doc_id", *carry,
                   F.posexplode_outer(F.expr(_ACCT_CHUNKS)).alias("apos", "ac"))
-          .select("_rid", "doc_id", *extra_keys, *keep_pos0,
+          .select("_rid", "doc_id", *keep_pos0,
                   *[F.expr(fields[f]).alias(f) for f in _ACCT_FIELDS]))
     valid = "(account_type IS NOT NULL AND account_type != '')"
     live = f"({valid} AND {X.live_plbl_pred('account_type', 'is_active')})"
@@ -258,27 +239,16 @@ def _with_accounts(df: DataFrame, carry: list[str],
         p = pred.format(r="remarks")
         aggs.append(F.count(F.when(F.expr(f"{valid} AND {p}"), 1))
                     .cast("int").alias(f"rep_m_{pid}"))
-    # non-primitive values that must survive the aggregation ride as
-    # GROUP KEYS (all functionally dependent on _rid): group keys may
-    # be strings without breaking HashAggregate, aggregate buffers may
-    # not.
-    return ex.groupBy("_rid", "doc_id", *extra_keys).agg(*aggs).drop("_rid")
+    return ex.groupBy("_rid", "doc_id").agg(*aggs).drop("_rid")
 
 
 def _with_tables(df: DataFrame) -> DataFrame:
     """Table-signature report values (crif_parser.py:28-127) — narrow
     higher-order exprs over the small per-doc tables array; the summary
     struct is flattened to primitive columns (see _SUMMARY_FIELDS).
-
-    The FUSED parse stage pre-flattens these in Python (semantics
-    account_summary/bureau_score/credit_inquiries — the same
-    definitions the oracle proves equal to these SQL forms), saving
-    the interpreted-HOF evaluation here; when those columns are
-    already present this is a no-op and the SQL forms below stay the
-    sql engine's (and legacy path's) implementation, cross-checked
-    end-to-end by the A9b agreement query."""
-    if "rep_score" in df.columns:
-        return df
+    The fused parse stage computes the same values in Python from the
+    semantics extractors (parse._parse_retr_batches); these SQL forms
+    serve the relational check plan and the legacy mode."""
     df = (df.withColumn("rep_score", F.expr(X.doc_score()))
           .withColumn("rep_summary", F.expr(X.doc_summary()))
           .withColumn("rep_inquiries", F.expr(X.doc_inquiries())))
@@ -299,9 +269,8 @@ def extract_crif_legacy(parsed: DataFrame) -> DataFrame:
     USE_EMBEDDING_GUIDED_EXTRACTION=False): report-level values only,
     direct_table/flag_detection/computed weights, no similarity boost,
     formatter-default 'extracted' status everywhere (incl. policy)."""
-    df = _with_tables(parsed.where(F.col("doc_kind") == "crif"))
-    if "n_accounts" not in df.columns:
-        df = _with_accounts(df, list(_REP_CARRY))
+    df = _with_accounts(_with_tables(parsed.where(F.col("doc_kind") == "crif")),
+                        list(_REP_CARRY))
     results = []
     for spec in PARAMETER_SPECS:
         pid = spec["param_id"]
@@ -345,184 +314,92 @@ def extract_crif_legacy(parsed: DataFrame) -> DataFrame:
             .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
 
 
-def extract_crif(parsed: DataFrame) -> DataFrame:
-    """parsed (doc_kind='crif') → long results table, one row per
-    (doc_id, param_id) — embedding-guided mode (the reference default,
-    config.py:58)."""
-    return extract_all(parsed.where(F.col("doc_kind") == "crif"))
-
-
-#: measured corpus-size crossover (BENCH/ENGINE_AB.md round-5 sweep):
-#: the r5 parse+retrieval FUSION moved it below the smallest measured
-#: size — the fused Arrow-UDF plan ties the relational plan at 600
-#: docs and wins 1.3-1.9x from 2400 to 24000 (and 1.8x at 160k, r3/r4)
-#: — so the default crossover is 0 (auto resolves udf at every scale).
-#: The size-aware mechanism stays env-overridable for recalibration if
-#: future semantics shift the balance back.
-ENGINE_CROSSOVER_DOCS = int(
-    __import__("os").environ.get("SPARK_GRAFT_ENGINE_CROSSOVER", "0"))
-
-
 def default_engine(n_docs: int | None = None) -> str:
-    """THE engine-selection point, shared by every entry path
-    (pipeline.extract_parameters, direct extract_all/extract_crif
-    callers, bench children): `SPARK_GRAFT_ENGINE` env ('sql', 'udf',
-    or 'auto' — the default).  'auto' resolves by the estimated input
-    size when the caller provides one (`n_docs`): the relational
-    engine below ENGINE_CROSSOVER_DOCS, the fused Arrow-UDF engine
-    at/above it (r4 VERDICT #2 — the shipped default should be the
-    measured winner at EVERY scale, not just the design point).
-    Without a size hint, 'auto' falls back to 'udf', the winner at
-    the 160k-doc design scale."""
-    import os
-    env = os.environ.get("SPARK_GRAFT_ENGINE", "auto")
-    if env != "auto":
-        return env
-    if n_docs is None:
-        return "udf"
-    return "sql" if n_docs < ENGINE_CROSSOVER_DOCS else "udf"
+    """Constant 'udf' (the shipped form); kept for bench.py's ``engine_default`` field."""
+    return "udf"
 
 
-def extract_all(parsed: DataFrame, engine: str | None = None,
-                n_docs: int | None = None) -> DataFrame:
-    """UNIFIED single-plan extraction for both document kinds.
+def _kind_routed(df: DataFrame, crif_results: list[str]) -> DataFrame:
+    """Kind routing (main.py:66-69) as a CASE over per-kind result
+    arrays inside ONE lineage, then explode to the long results table
+    (one row per (doc_id, param_id)); other kinds yield no rows."""
+    from .gstr import gstr_result_structs
 
-    Kind routing (main.py:66-69) is a CASE over per-kind result arrays
-    inside ONE lineage, so the parse stage executes exactly once (a
-    plan-level union re-runs the Python parse per branch — measured).
-
-    engine=None resolves via ``default_engine(n_docs)`` (env switch,
-    size-aware 'auto' default).
-    engine='sql': the retrieval stage runs JVM-side
-    (retrieval_sql.py) — zero Python beyond the Arrow parse.
-    engine='udf': the Arrow pandas_udf retrieval — an INDEPENDENT
-    physical plan; the A9 consistency check (test_accuracy.py:79-115
-    analogue) proves the two agree."""
-    if engine is None:
-        engine = default_engine(n_docs)
-    if engine == "sql":
-        from .gstr import gstr_result_structs, with_gstr_columns
-        from .retrieval_sql import relational_extract_columns
-
-        if "tables" not in parsed.columns:
-            raise ValueError(
-                "engine='sql' needs the full parsed schema "
-                "(tables/chunks/text); got a pre-flattened fused parse — "
-                "use parse_documents(docs) without fuse_retrieval")
-        # r6: the relational plan references text/tables/chunks dozens
-        # of times; over the prunable JVM parse those are interpreted
-        # HOF expressions the optimizer may inline per reference
-        # (measured 25 s → 74 s at sf1.0/240k).  When the input is an
-        # unmodified parse_documents() output, rebuild from its source
-        # with the opaque Arrow parse — one materialization, attribute
-        # references downstream (the exact pre-r6 plan; parity between
-        # the two parse forms is pinned by the span-equality suite).
-        src = getattr(parsed, "_plain_parse_docs", None)
-        if src is not None:
-            from ..parse import parse_documents_arrow
-            parsed = parse_documents_arrow(src)
-        # the relational engine computes the account aggregates itself
-        # (its independence is what the A9b agreement check buys); a
-        # fused-parse input's pre-flattened copies would collide with
-        # the aggregation aliases, so shed them here
-        from ..parse import _ACCT_AGG_COLS
-        df = _with_tables(parsed.drop(*_ACCT_AGG_COLS))
-        df = with_gstr_columns(df)
-        df = relational_extract_columns(df)
-        results = []
-        for i, spec in enumerate(PARAMETER_SPECS):
-            pid = spec["param_id"]
-            if spec["category"] == "policy":
-                results.append(_policy_result(pid))
-                continue
-            if spec["category"] == "direct":
-                struct = _direct_param(i, spec)
-            elif spec["category"] == "flag":
-                struct, _ = _flag_param(i, spec)
-            else:
-                struct = _derived_param(i, spec)
-            # retrieval miss → NOT_FOUND (crif.py:154-162)
-            results.append(f"(CASE WHEN bscore_{i} IS NULL "
-                           f"THEN {_not_found_result(pid)} ELSE {struct} END)")
-        arr = (f"CASE WHEN doc_kind = 'crif' THEN array({', '.join(results)}) "
-               f"WHEN doc_kind = 'gstr' THEN {gstr_result_structs()} "
-               f"ELSE array() END")
-        return (df.select("doc_id", F.explode(F.expr(arr)).alias("r"))
-                .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
-    return extract_all_udf(parsed)
+    arr = (f"CASE WHEN doc_kind = 'crif' THEN array({', '.join(crif_results)}) "
+           f"WHEN doc_kind = 'gstr' THEN {gstr_result_structs()} "
+           f"ELSE array() END")
+    return (df.select("doc_id", F.explode(F.expr(arr)).alias("r"))
+            .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
 
 
-def extract_all_udf(parsed: DataFrame) -> DataFrame:
-    """Arrow-UDF engine.  Two input shapes:
-
-    * FULLY PRE-FLATTENED fused parse (parse.py fuse_retrieval=True,
-      detected by `bscore_0`): every per-parameter scalar is already a
-      primitive column, so this is a pure-codegen projection — build
-      the result structs, explode.  ZERO shuffles, zero JVM HOFs,
-      slim Arrow payload (the flagship plan).
-    * full parsed schema (legacy round-2 plan): pandas_udf retrieval +
-      JVM HOF lookups + relational account aggregation.  Kept as a
-      third physical form for the consistency harness."""
-    from .gstr import GSTR_CARRY, GSTR_KEYS, gstr_result_structs, with_gstr_columns
-
-    pref = "bscore_0" in parsed.columns
-    if pref:
-        df = parsed
-    else:
-        df = with_retrieval(parsed)
-        df = _with_tables(df)
-        df = with_gstr_columns(df)
-
-    # per-parameter best-chunk lookups: computed BEFORE the account
-    # aggregation while the wide tables/chunks columns are still in
-    # scope; only the slim derived scalars ride the shuffle
-    carry = list(_REP_CARRY)
+def _crif_results() -> list[str]:
+    """The 15 crif result structs over the per-parameter primitive
+    columns (bscore_i, cv_i/bt_id_i, nc_i/mc_i) and the report/account
+    aggregates — the column contract both extraction forms satisfy."""
     results = []
     for i, spec in enumerate(PARAMETER_SPECS):
         pid = spec["param_id"]
-        best = f"try_element_at(retr, {i + 1})"
         if spec["category"] == "policy":
             results.append(_policy_result(pid))
             continue
-        if not pref:
-            # only the best score survives past the account aggregation
-            # — a primitive column, so the aggregation stays
-            # HashAggregate
-            df = df.withColumn(f"bscore_{i}", F.expr(f"{best}.score"))
-            carry.append(f"bscore_{i}")
         if spec["category"] == "direct":
-            if not pref:
-                df = df.withColumn(
-                    f"bt_{i}",
-                    F.expr(f"CASE WHEN {best}.score IS NOT NULL AND {best}.ctype = 'table' "
-                           f"THEN try_element_at(filter(tables, t -> t.id = {best}.ref_idx), 1) END"))
-                df = (df.withColumn(f"cv_{i}", F.expr(_direct_chunk_value(pid, f"bt_{i}")))
-                      .withColumn(f"bt_id_{i}", F.expr(f"bt_{i}.id")))
-                carry += [f"cv_{i}", f"bt_id_{i}"]
             struct = _direct_param(i, spec)
         elif spec["category"] == "flag":
-            struct, inter = _flag_param(i, spec)
-            if not pref:
-                if pid in X.FLAG_PREDS:
-                    df = df.withColumn(
-                        f"bc_{i}",
-                        F.expr(f"CASE WHEN {best}.score IS NOT NULL AND {best}.ctype = 'text' "
-                               f"THEN try_element_at(filter(chunks, c -> c.chunk_idx = {best}.ref_idx), 1) END"))
-                for name, expr in inter.items():
-                    df = df.withColumn(name, F.expr(expr))
-                carry += list(inter)
+            struct = _flag_param(i, spec)
         else:
             struct = _derived_param(i, spec)
         # retrieval miss → NOT_FOUND (crif.py:154-162)
         results.append(f"(CASE WHEN bscore_{i} IS NULL "
                        f"THEN {_not_found_result(pid)} ELSE {struct} END)")
+    return results
 
-    if not pref:
-        carry += GSTR_CARRY
-        if "n_accounts" not in df.columns:
-            df = _with_accounts(df, carry, extra_keys=("doc_kind", *GSTR_KEYS))
-    arr = (f"CASE WHEN doc_kind = 'crif' THEN array({', '.join(results)}) "
-           f"WHEN doc_kind = 'gstr' THEN {gstr_result_structs()} "
-           f"ELSE array() END")
-    return (df.select("doc_id", F.explode(F.expr(arr)).alias("r"))
-            .select("doc_id", *[f"r.{f}" for f in RESULT_FIELDS]))
+
+def extract_all(parsed: DataFrame, engine: str = "udf") -> DataFrame:
+    """Embedding-guided extraction for both document kinds.
+
+    engine='udf' (the shipped form): ``extract_all_udf`` over the fused
+    parse (``parse_documents(docs, fuse_retrieval=True)``).
+    engine='sql': the relational check plan over the full parsed schema
+    (``parse_documents(docs)``) — retrieval, report values and account
+    aggregates computed JVM-side by independent SQL forms
+    (retrieval_sql.py), so agreement with the shipped form is a real
+    cross-check (q_a9b_engine_agreement, the parity fixture)."""
+    if engine == "udf":
+        return extract_all_udf(parsed)
+    if engine != "sql":
+        raise ValueError(f"unknown engine {engine!r} (expected 'udf' or 'sql')")
+    from .gstr import with_gstr_columns
+    from .retrieval_sql import relational_extract_columns
+
+    if "tables" not in parsed.columns:
+        raise ValueError(
+            "engine='sql' needs the full parsed schema "
+            "(tables/chunks/text); got a pre-flattened fused parse — "
+            "use parse_documents(docs) without fuse_retrieval")
+    # r6: the relational plan references text/tables/chunks dozens
+    # of times; over the prunable JVM parse those are interpreted
+    # HOF expressions the optimizer may inline per reference
+    # (measured 25 s → 74 s at sf1.0/240k).  When the input is an
+    # unmodified parse_documents() output, rebuild from its source
+    # with the opaque Arrow parse — one materialization, attribute
+    # references downstream (the exact pre-r6 plan; parity between
+    # the two parse forms is pinned by the span-equality suite).
+    src = getattr(parsed, "_plain_parse_docs", None)
+    if src is not None:
+        from ..parse import parse_documents_arrow
+        parsed = parse_documents_arrow(src)
+    df = relational_extract_columns(with_gstr_columns(_with_tables(parsed)))
+    return _kind_routed(df, _crif_results())
+
+
+def extract_all_udf(parsed: DataFrame) -> DataFrame:
+    """The shipped extraction projection: over the fused parse
+    (parse.py ``fuse_retrieval=True``) every per-parameter scalar is
+    already a primitive column, so this is pure codegen — build the
+    result structs, explode.  Zero shuffles, zero JVM HOFs."""
+    if "bscore_0" not in parsed.columns:
+        raise ValueError(
+            "extract_all_udf needs the fused parse "
+            "(parse_documents(docs, fuse_retrieval=True)); for the full "
+            "parsed schema use extract_all(parsed, engine='sql')")
+    return _kind_routed(parsed, _crif_results())

@@ -67,8 +67,10 @@ def run_with_lineage(docs: DataFrame, out_dir: str,
         pending = pending.where(F.col("bucket").isin(buckets_subset))
 
     t0 = time.perf_counter()
-    parsed = parse_documents(pending.select("doc_id", "spans"))
-    results = extract_parameters(parsed)
+    # the shipped form (pipeline.extract_from_raw), spelled through this
+    # module's imports so the two calls stay individually traceable
+    results = extract_parameters(
+        parse_documents(pending.select("doc_id", "spans"), fuse_retrieval=True))
     out = (results
            .withColumn("bucket",
                        F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")))

@@ -237,6 +237,9 @@ def duplicate_ngram_report(df: DataFrame, n: int = 8, min_docs: int = 2,
 
     Returns (doc_id, n_grams, n_dup_grams, dup_ratio) for every doc.
 
+    `id_col` must be unique per row: counts are pooled per id and
+    joined back, so rows sharing an id all report the pooled grams.
+
     Differs from `contamination_report` (overlap vs a SMALL broadcast
     eval set) and `textstats.with_repetition_stats` (WITHIN-doc
     repetition): this is corpus × corpus, so the gram census cannot

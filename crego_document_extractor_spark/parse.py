@@ -8,10 +8,19 @@
 * ``tables``       ordered table structs, id=enumerate (parser.py:90-106)
 * ``chunks``       header-segmented chunks (parser.py:107-124)
 
-Implemented as ONE ``mapInPandas`` stage: Arrow-batched in and out, no
-per-row Python UDFs, no shuffle.  The Python body delegates to the
-shared pure-function core in :mod:`..semantics` so the parse semantics
-have a single definition.  All downstream extraction is JVM-side SQL.
+Two physical forms, both narrow (no shuffle):
+
+* ``parse_documents(docs)`` — the full parsed schema as pure JVM SQL
+  (``parse_documents_jvm``), which Catalyst prunes per consumer: the
+  clean-spans deliverable, the relational check plan, the RAG fallback.
+* ``parse_documents(docs, fuse_retrieval=True)`` — the shipped
+  extraction input: ONE Arrow-batched ``mapInPandas`` stage that parses,
+  retrieves and pre-flattens every scalar the result builders consume
+  (``_parse_retr_batches``).
+
+The Python body delegates to the shared pure-function core in
+:mod:`..semantics` so the parse semantics have a single definition;
+the JVM expressions mirror it line by line.
 """
 
 from __future__ import annotations
@@ -63,7 +72,9 @@ DOCUMENTS_SCHEMA = T.StructType([
 _KINDS = ("crif", "gstr", "html")
 
 
-def _doc_kind(doc_id: str) -> str:
+def _doc_kind(doc_id: str | None) -> str:
+    if doc_id is None:  # as DOC_KIND_SQL: a NULL doc_id is 'other'
+        return "other"
     head = doc_id.split("-", 1)[0]
     return head if head in _KINDS else "other"
 
@@ -131,7 +142,7 @@ def _direct_cv(pid: str, t: dict):
     """Chunk-aware direct value from the winning TABLE candidate
     (crif.py:311-359) — the Python twin of crif._direct_chunk_value's
     SQL forms, built from the same semantics extractors the oracle
-    uses, so fused-vs-unfused parity is by shared definition."""
+    uses; the relational check plan evaluates the SQL forms."""
     if pid == "bureau_credit_score":
         return S.bureau_score_from_table(t)
     if pid == "bureau_written_off_debt_amount":
@@ -206,11 +217,11 @@ def _parse_retr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     pandas→Arrow conversion and the JVM-side interpreted-HOF lookups
     (19 filter(tables/chunks) calls) as the residual cost after the r5
     fusion, so the fused payload is now ~50 primitive columns and the
-    JVM side is pure codegen CASE/concat over them.  Semantics are
-    shared function-for-function with the unfused plan (retrieve_rows /
-    candidate_pool / semantics extractors), which stays as the second
-    physical form, cross-checked by the A9b agreement query and the
-    fused==unfused parity test (tests/test_paths.py)."""
+    JVM side is pure codegen CASE/concat over them.  Semantics come
+    from retrieve_rows / candidate_pool / the semantics extractors the
+    oracle uses; the relational check plan (extract_all engine='sql')
+    recomputes them in SQL, cross-checked by the A9b agreement query
+    and the parity fixture."""
     from .extract.retrieval import candidate_pool, retrieve_rows
     from .specs import PARAMETER_SPECS
 
@@ -229,10 +240,9 @@ def _parse_retr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         # ACCOUNT aggregates (parse_crif_report, crif_parser.py:7-25):
         # one Account-Information chunk = one account, parse_account
         # returns None on empty Account Type — the same validity the
-        # SQL path filters on.  Pre-flattening these lets the udf
-        # engine skip the posexplode→HashAggregate entirely (its only
-        # shuffle); the SQL forms in _with_accounts stay the sql
-        # engine's path.
+        # SQL forms filter on.  Pre-flattening these spares the shipped
+        # plan a posexplode→HashAggregate (a shuffle); the relational
+        # check plan computes them in SQL (retrieval_sql.py).
         for k in _ACCT_AGG_COLS:
             rep[k] = []
         for chunks in pdf["chunks"]:
@@ -495,15 +505,24 @@ def parse_documents(docs: DataFrame, fuse_retrieval: bool = False) -> DataFrame:
     spark.sql.execution.arrow.maxRecordsPerBatch.
 
     ``fuse_retrieval=True`` emits the FULLY PRE-FLATTENED extraction
-    input from the SAME Python stage: per-parameter best-chunk scores
-    and chunk-aware values (bscore/cv/bt_id/nc/mc), report + account
+    input from ONE Python stage: per-parameter best-chunk scores and
+    chunk-aware values (bscore/cv/bt_id/nc/mc), report + account
     aggregates, and the GSTR primitives — ~50 primitive columns, no
-    nested arrays, no text.  Use when the consumer is the udf-engine
-    extraction (extract_all_udf builds pure-codegen result structs over
-    these columns); plain parses (clean_spans-only consumers, the sql
-    engine) keep the default full parsed schema.
+    nested arrays, no text.  Its consumer is the shipped extraction
+    (crif.extract_all_udf builds pure-codegen result structs over these
+    columns); plain parses (clean-spans consumers, the relational check
+    plan) keep the default full parsed schema.
     """
     if fuse_retrieval:
+        # ship only the rows' payload the stage can use (guide §4.1):
+        # extraction emits an empty result array for every kind other
+        # than crif/gstr, so those documents' spans are blanked
+        # JVM-side and never cross the Arrow boundary nor get parsed
+        # (~40% of the bench corpus is html: −0.5 s of Arrow transfer
+        # + Python parse at 240k docs)
+        docs = docs.withColumn("spans", F.expr(
+            f"CASE WHEN {DOC_KIND_SQL} IN ('crif', 'gstr') THEN spans "
+            f"ELSE CAST(array() AS array<{SPAN_TYPE.simpleString()}>) END"))
         schema = T.StructType(
             [T.StructField("doc_id", T.StringType()),
              T.StructField("doc_kind", T.StringType()),
@@ -529,7 +548,7 @@ def parse_documents(docs: DataFrame, fuse_retrieval: bool = False) -> DataFrame:
     # and Catalyst prunes unused parse columns per consumer (the
     # mapInPandas form computed and Arrow-shipped every column for
     # every consumer; `_parse_batches` remains the Python twin used by
-    # the fused stage above and the test oracle).  The raw input rides
+    # the fused stage above).  The raw input rides
     # along as a Python-side tag: a consumer that references the wide
     # parse columns MANY times (the relational engine) re-parses from
     # the source with the Arrow stage instead, where one opaque

@@ -51,21 +51,25 @@ def expected_rows(expected):
     return out
 
 
-@pytest.fixture(scope="session", params=["udf", "sql"])
+@pytest.fixture(scope="session", params=["fused", "relational"],
+                ids=["udf", "sql"])  # ids: the extract_all engine names
 def pipeline_outputs(spark, docs_path, request):
-    """Runs the full pipeline under BOTH retrieval engines — the
-    Arrow-UDF default and the pure-JVM relational plan — so every
-    downstream parity test asserts oracle equality for each."""
+    """Runs the pipeline through BOTH extraction forms — the shipped
+    fused form (pipeline.run → extract_from_raw) and the relational
+    check plan (extract_all engine='sql') — so every downstream parity
+    test asserts oracle equality for each."""
     from crego_document_extractor_spark import pipeline
+    from crego_document_extractor_spark.extract.crif import extract_all
 
-    os.environ["SPARK_GRAFT_ENGINE"] = request.param
-    try:
-        docs_df = pipeline.load_documents(spark, docs_path)
+    docs_df = pipeline.load_documents(spark, docs_path)
+    if request.param == "fused":
         spans_df, results_df = pipeline.run(docs_df)
-        spans = {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
-                 for r in spans_df.collect()}
-        rows = {(r["doc_id"], r["param_id"]): r.asDict()
-                for r in results_df.collect()}
-    finally:
-        os.environ.pop("SPARK_GRAFT_ENGINE", None)
+    else:
+        parsed = pipeline.parse_documents(pipeline.ensure_parallelism(docs_df))
+        spans_df = pipeline.clean_spans(parsed)
+        results_df = extract_all(parsed, engine="sql")
+    spans = {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
+             for r in spans_df.collect()}
+    rows = {(r["doc_id"], r["param_id"]): r.asDict()
+            for r in results_df.collect()}
     return spans, rows

@@ -11,6 +11,7 @@ from hypothesis import given, settings, strategies as st
 from crego_document_extractor_spark import oracle
 from crego_document_extractor_spark.parse import DOCUMENTS_SCHEMA
 from crego_document_extractor_spark import pipeline
+from crego_document_extractor_spark.extract.crif import extract_all
 
 FIELDS = ("value_num", "value_bool", "value_str", "value_type",
           "source", "confidence", "status", "similarity_score")
@@ -69,35 +70,33 @@ def test_fuzzed_documents_match_oracle(spark, docs_spec):
         [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
                         for s in d["spans"]]) for d in docs],
         schema=DOCUMENTS_SCHEMA)
-    # fuzz the RELATIONAL engine — it is the independent SQL
-    # implementation; the UDF engine is covered by the parametrized
-    # conftest fixture and the A9b agreement query
-    import os
-    os.environ["SPARK_GRAFT_ENGINE"] = "sql"
-    try:
-        spans_df, results_df = pipeline.run(df, repartition=False)
-        exp = {d["doc_id"]: oracle.extract_document(d) for d in docs}
-    finally:
-        os.environ.pop("SPARK_GRAFT_ENGINE", None)
+    exp = {d["doc_id"]: oracle.extract_document(d) for d in docs}
 
     got_spans = {r["doc_id"]: [s.asDict() for s in r["clean_spans"]]
-                 for r in spans_df.collect()}
+                 for r in pipeline.clean_spans(
+                     pipeline.parse_documents(df)).collect()}
     for doc_id, e in exp.items():
         assert got_spans[doc_id] == e["clean_spans"], doc_id
 
-    got_rows = {(r["doc_id"], r["param_id"]): r.asDict()
-                for r in results_df.collect()}
     exp_rows = {(r["doc_id"], r["param_id"]): r
                 for e in exp.values() for r in e["results"]}
-    assert set(got_rows) == set(exp_rows)
-    for k, e in exp_rows.items():
-        g = got_rows[k]
-        for f in FIELDS:
-            ev, gv = e[f], g[f]
-            ok = (math.isclose(ev, gv, abs_tol=1e-12)
-                  if isinstance(ev, float) and isinstance(gv, float)
-                  else ev == gv)
-            assert ok, (k, f, ev, gv)
+    # both extraction forms: the shipped fused stage and the
+    # independent relational SQL plan
+    forms = {"fused": pipeline.extract_from_raw(df),
+             "relational": extract_all(pipeline.parse_documents(df),
+                                       engine="sql")}
+    for form, results_df in forms.items():
+        got_rows = {(r["doc_id"], r["param_id"]): r.asDict()
+                    for r in results_df.collect()}
+        assert set(got_rows) == set(exp_rows), form
+        for k, e in exp_rows.items():
+            g = got_rows[k]
+            for f in FIELDS:
+                ev, gv = e[f], g[f]
+                ok = (math.isclose(ev, gv, abs_tol=1e-12)
+                      if isinstance(ev, float) and isinstance(gv, float)
+                      else ev == gv)
+                assert ok, (form, k, f, ev, gv)
 
 
 def test_pdf_parser_survives_garbage_bytes():

@@ -8,6 +8,7 @@ import math
 from crego_document_extractor_spark import oracle
 from crego_document_extractor_spark.parse import DOCUMENTS_SCHEMA
 from crego_document_extractor_spark import pipeline
+from crego_document_extractor_spark.extract.crif import extract_all
 
 FIELDS = ("value_num", "value_bool", "value_str", "value_type",
           "source", "confidence", "status", "similarity_score")
@@ -39,25 +40,24 @@ DOC_FLAG_CHUNK = _doc("crif-900002", [
 ])
 
 
-def _run(spark, docs):
-    import os
-    df = spark.createDataFrame([(d["doc_id"], [tuple(s.values()) for s in
-                                               [{"kind": x["kind"], "text": x["text"],
-                                                 "media_ref": x["media_ref"],
-                                                 "offset": x["offset"]}
-                                                for x in d["spans"]]])
-                                for d in docs], schema=DOCUMENTS_SCHEMA)
-    # pin the RELATIONAL engine: these path tests target the
-    # independent SQL implementations (the UDF engine shares the
-    # oracle's python semantics by construction and is covered by the
-    # engine-parametrized conftest fixture)
-    os.environ["SPARK_GRAFT_ENGINE"] = "sql"
-    try:
-        _, results = pipeline.run(df, repartition=False)
-        return {(r["doc_id"], r["param_id"]): r.asDict()
-                for r in results.collect()}
-    finally:
-        os.environ.pop("SPARK_GRAFT_ENGINE", None)
+def _docs_df(spark, docs):
+    return spark.createDataFrame(
+        [(d["doc_id"], [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                        for s in d["spans"]]) for d in docs],
+        schema=DOCUMENTS_SCHEMA)
+
+
+def _forms(df):
+    """results of the shipped fused form and of the relational check
+    plan over the same documents"""
+    return {"fused": pipeline.extract_from_raw(df),
+            "relational": extract_all(pipeline.parse_documents(df),
+                                      engine="sql")}
+
+
+def _rows(results):
+    return {(r["doc_id"], r["param_id"]): r.asDict()
+            for r in results.collect()}
 
 
 def _expected(docs):
@@ -68,17 +68,22 @@ def _expected(docs):
     return out
 
 
-def test_chunk_aware_paths_match_oracle(spark):
-    docs = [DOC_TABLES_ONLY, DOC_FLAG_CHUNK]
-    got, exp = _run(spark, docs), _expected(docs)
-    assert set(got) == set(exp)
+def _assert_rows_match(got, exp, label):
+    assert set(got) == set(exp), label
     for k, e in exp.items():
         g = got[k]
         for f in FIELDS:
             ev, gv = e[f], g[f]
             ok = (math.isclose(ev, gv, abs_tol=1e-12)
                   if isinstance(ev, float) and isinstance(gv, float) else ev == gv)
-            assert ok, (k, f, ev, gv)
+            assert ok, (label, k, f, ev, gv)
+
+
+def test_chunk_aware_paths_match_oracle(spark):
+    docs = [DOC_TABLES_ONLY, DOC_FLAG_CHUNK]
+    exp = _expected(docs)
+    for form, results in _forms(_docs_df(spark, docs)).items():
+        _assert_rows_match(_rows(results), exp, form)
 
     # the distinctive paths actually fired (guard against silently
     # regressing into report-level fallbacks)
@@ -97,7 +102,7 @@ def test_duplicate_doc_ids_stay_independent(spark, tmp_path):
     processes one request = one document): extraction must preserve the
     row count and per-row values — no cross-row merging on doc_id
     (regression: the relational account aggregation once keyed on
-    doc_id and collapsed colliding rows)."""
+    doc_id and collapsed colliding rows).  Checked on both forms."""
     from crego_document_extractor_spark import corpus
 
     p1, p2 = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
@@ -106,29 +111,49 @@ def test_duplicate_doc_ids_stay_independent(spark, tmp_path):
     d1 = pipeline.load_documents(spark, p1)
     d2 = pipeline.load_documents(spark, p2)
 
-    def rows(df):
-        return sorted(
-            tuple(repr(v) for v in r)
-            for r in pipeline.extract_parameters(
-                pipeline.parse_documents(df)).collect())
+    def rows(df, form):
+        return sorted(tuple(repr(v) for v in r)
+                      for r in _forms(df)[form].collect())
 
-    combined = rows(d1.unionByName(d2))
-    separate = sorted(rows(d1) + rows(d2))
-    assert combined == separate
+    for form in ("fused", "relational"):
+        combined = rows(d1.unionByName(d2), form)
+        separate = sorted(rows(d1, form) + rows(d2, form))
+        assert combined == separate, form
 
 
-def test_fused_extract_equals_unfused(spark):
-    """pipeline.extract_from_raw (fused parse+retrieval MapInPandas)
-    must be row-for-row identical to the two-stage plan — the r5
-    fusion is a physical rewrite only."""
-    from crego_document_extractor_spark import corpus, pipeline
-    from crego_document_extractor_spark.parse import parse_documents
-    import tempfile, os
+def test_fused_extract_matches_oracle_on_mega_docs(spark, tmp_path):
+    """pipeline.extract_from_raw (the shipped fused parse+retrieval
+    MapInPandas) equals the oracle row for row, bit for bit, on a
+    corpus with heavy-tailed mega-documents."""
+    from crego_document_extractor_spark import corpus
 
-    path = os.path.join(tempfile.mkdtemp(), "fuse.parquet")
+    path = str(tmp_path / "fuse.parquet")
     corpus.write_corpus(path, 120, seed=13, big_doc_every=17)
-    docs = spark.read.parquet(path)
-    unfused = sorted(map(tuple, pipeline.extract_parameters(
-        parse_documents(docs)).collect()))
-    fused = sorted(map(tuple, pipeline.extract_from_raw(docs).collect()))
-    assert fused == unfused
+    exp = _expected(corpus.gen_documents(120, seed=13, big_doc_every=17))
+    got = _rows(pipeline.extract_from_raw(spark.read.parquet(path)))
+    # exact: the fused stage and the oracle share semantics.py
+    assert ({k: tuple(r[f] for f in FIELDS) for k, r in got.items()}
+            == {k: tuple(r[f] for f in FIELDS) for k, r in exp.items()})
+
+
+def test_null_doc_id_yields_no_rows(spark, tmp_path):
+    """A row with a NULL doc_id is kind 'other' (parse.DOC_KIND_SQL and
+    parse._doc_kind agree): it yields no result rows and does not fail
+    the job, and every other document's results still match the
+    oracle — on the batch job path and on extract_from_raw."""
+    from crego_document_extractor_spark import corpus, lineage
+
+    docs = list(corpus.gen_documents(6, seed=7, big_doc_every=0))
+    exp = _expected(docs)
+    crif = next(d for d in docs if d["doc_id"].startswith("crif-"))
+    df = _docs_df(spark, docs + [dict(crif, doc_id=None)])
+
+    got = _rows(pipeline.extract_from_raw(df))
+    assert not any(d is None for d, _ in got)
+    _assert_rows_match(got, exp, "extract_from_raw")
+
+    out = str(tmp_path / "job")
+    lineage.run_with_lineage(df, out, n_buckets=4)
+    got = _rows(lineage.read_results(spark, out).drop("bucket"))
+    assert not any(d is None for d, _ in got)
+    _assert_rows_match(got, exp, "run_with_lineage")

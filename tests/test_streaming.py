@@ -4,15 +4,26 @@ checkpoint makes a restarted stream process only new files."""
 import os
 import shutil
 
-from crego_document_extractor_spark import corpus, pipeline, streaming
+from crego_document_extractor_spark import corpus, oracle, streaming
+
+_KEYS = ("doc_id", "param_id", "value_num", "value_bool", "value_str",
+         "confidence", "status")
+
+
+def _sorted(rows):
+    return sorted((tuple(r[k] for k in _KEYS) for r in rows),
+                  key=lambda t: tuple(repr(x) for x in t))
 
 
 def _results_set(df):
-    return sorted(
-        ((r["doc_id"], r["param_id"], r["value_num"], r["value_bool"],
-          r["value_str"], r["confidence"], r["status"])
-         for r in df.collect()),
-        key=lambda t: tuple(repr(x) for x in t))
+    return _sorted(df.collect())
+
+
+def _oracle_set(*corpora):
+    """expected result rows of corpus.gen_documents(n, seed) slices"""
+    return _sorted(r for n, seed in corpora
+                   for d in corpus.gen_documents(n, seed=seed, big_doc_every=0)
+                   for r in oracle.extract_document(d)["results"])
 
 
 def test_stream_matches_batch_and_resumes(spark, tmp_path):
@@ -27,9 +38,7 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
     q.awaitTermination(120)
 
     got1 = spark.read.parquet(f"{out_dir}/results")
-    batch1 = pipeline.extract_parameters(
-        pipeline.parse_documents(spark.read.parquet(f"{in_dir}/part1.parquet")))
-    assert _results_set(got1.drop("batch_id")) == _results_set(batch1)
+    assert _results_set(got1) == _oracle_set((40, 7))
 
     # add a second file; restarted stream must process ONLY the new file
     corpus.write_corpus(f"{in_dir}/part2.parquet", 30, seed=9, big_doc_every=0)
@@ -37,9 +46,7 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
     q2.awaitTermination(120)
 
     got2 = spark.read.parquet(f"{out_dir}/results")
-    both = pipeline.extract_parameters(
-        pipeline.parse_documents(spark.read.parquet(in_dir)))
-    assert _results_set(got2.drop("batch_id")) == _results_set(both)
+    assert _results_set(got2) == _oracle_set((40, 7), (30, 9))
 
     shutil.rmtree(out_dir)
 
